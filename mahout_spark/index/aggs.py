@@ -74,7 +74,7 @@ def significant_terms(
         matching_docs(spark, cat, query, max_expansions=max_expansions),
         cleanup,
     )
-    tf_raw = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+    tf_raw = cat.read(spark, "tf_raw")
     fg = (
         tf_raw.join(m, "doc_id", "left_semi")
         .groupBy("term")
@@ -88,9 +88,9 @@ def significant_terms(
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, score double"
         )
-    lex = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    ).select("term", F.col("df").alias("bg_df"))
+    lex = cat.read(spark, "lexicon").select(
+        "term", F.col("df").alias("bg_df")
+    )
     fg_rate = F.col("fg_df") / F.lit(float(n_matched))
     bg_rate = F.col("bg_df") / F.lit(float(n_docs))
     out = (
@@ -146,9 +146,7 @@ def significant_text(
         cleanup,
     )
     if filter_duplicate_text:
-        stats = cat.read(
-            spark, "docstats", schema_json=meta.get("docstats_schema")
-        ).select("doc_id", "content_sha")
+        stats = cat.read(spark, "docstats").select("doc_id", "content_sha")
         m = eager_checkpoint(
             stats.join(m, "doc_id", "left_semi")
             .groupBy("content_sha")
@@ -156,7 +154,7 @@ def significant_text(
             .select("doc_id"),
             cleanup,
         )
-    tf_raw = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+    tf_raw = cat.read(spark, "tf_raw")
     fg = (
         tf_raw.join(m, "doc_id", "left_semi")
         .groupBy("term")
@@ -167,9 +165,9 @@ def significant_text(
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, score double"
         )
-    lex = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    ).select("term", F.col("df").alias("bg_df"))
+    lex = cat.read(spark, "lexicon").select(
+        "term", F.col("df").alias("bg_df")
+    )
     fg_rate = F.col("fg_df") / F.lit(float(n_matched))
     bg_rate = F.col("bg_df") / F.lit(float(n_docs))
     return (
@@ -437,7 +435,9 @@ def string_stats(
         .filter(F.col("_rn") == 1)
         .select(F.round("_c", 6).alias("entropy"))
     )
-    return lens.crossJoin(F.broadcast(ent))
+    # left join on a constant key: an empty match set (or only empty
+    # strings) has no char relation, and must still yield the count=0 row
+    return lens.join(F.broadcast(ent), F.lit(True), "left")
 
 
 def extended_stats(
@@ -673,12 +673,11 @@ def rare_terms(
     partial-agg shuffle keyed by term (the tail never concentrates)."""
     from mahout_spark.checkpoint import eager_checkpoint
 
-    meta = cat.read_meta("postings")
     m = eager_checkpoint(
         matching_docs(spark, cat, query, max_expansions=max_expansions),
         cleanup,
     )
-    tf_raw = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+    tf_raw = cat.read(spark, "tf_raw")
     fg = (
         tf_raw.join(m, "doc_id", "left_semi")
         .groupBy("term")
@@ -893,9 +892,7 @@ def terms_enum(
     if meta.get("permuterm") and SENTINEL not in prefix:
         cand = prefix_candidates(spark, cat, prefix)
     else:
-        lex = cat.read(
-            spark, "lexicon", schema_json=meta.get("lexicon_schema")
-        )
+        lex = cat.read(spark, "lexicon")
         cand = lex.filter(F.col("term").startswith(prefix))
     return (
         cand.filter(F.col("df") >= min_df)

@@ -89,9 +89,7 @@ def append_to_index(
 
     # -- uniqueness guard (the reference's category-key overwrite bug,
     # SURVEY.md §2.1 S4, made structurally impossible) --------------------
-    existing_ids = cat.read(
-        spark, "docstats", schema_json=meta.get("docstats_schema")
-    ).select("doc_id")
+    existing_ids = cat.read(spark, "docstats").select("doc_id")
     n_dup = new_docs.join(existing_ids, "doc_id", "left_semi").count()
     if n_dup:
         raise ValueError(
@@ -126,9 +124,7 @@ def append_to_index(
             .join(doclens, "doc_id", "left")
             .fillna(0, ["doclen"])
         )
-        old_schema = cat.read(
-            spark, "docstats", schema_json=meta.get("docstats_schema")
-        ).schema
+        old_schema = cat.read(spark, "docstats").schema
         for field in old_schema.fields:
             if field.name not in new_stats.columns:
                 # typed null — a string-cast null would fork the parquet
@@ -161,9 +157,7 @@ def append_to_index(
             dl_sum = int(meta["doclen_sum"]) + int(arow["dl_sum"] or 0)
             dl_n = int(meta["doclen_n"]) + int(arow["dl_n"] or 0)
         else:  # legacy meta without running totals: one-time recompute
-            docstats = cat.read(
-                spark, "docstats", schema_json=meta.get("docstats_schema")
-            )
+            docstats = cat.read(spark, "docstats")
             row = docstats.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.when(F.col("doclen") > 0, F.col("doclen")))
@@ -179,9 +173,7 @@ def append_to_index(
         new_lex = tf.groupBy("term", "bucket").agg(
             F.count(F.lit(1)).alias("df_new"), F.sum("tf").alias("cf_new")
         )
-        old_lex = cat.read(
-            spark, "lexicon", schema_json=meta.get("lexicon_schema")
-        )
+        old_lex = cat.read(spark, "lexicon")
         max_id_row = old_lex.agg(F.max("term_id")).first()
         next_id = int(max_id_row[0]) + 1 if max_id_row[0] is not None else 0
         merged = (
@@ -308,9 +300,7 @@ def _rollback_partial_append(spark, cat, tag, meta) -> None:
                   "permuterm", "gramindex"):
         removed += cat.remove_tagged(table, tag)
     if removed:
-        docstats = cat.read(
-            spark, "docstats", schema_json=meta.get("docstats_schema")
-        )
+        docstats = cat.read(spark, "docstats")
         row = docstats.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("doclen") > 0, F.col("doclen")))
@@ -325,14 +315,10 @@ def _rollback_partial_append(spark, cat, tag, meta) -> None:
             meta["doclen_sum"] / meta["doclen_n"] if meta["doclen_n"] else 0.0
         )
         cat.write_meta("postings", meta)
-        true_stats = cat.read(
-            spark, "tf_raw", schema_json=meta.get("tf_schema")
-        ).groupBy("term", "bucket").agg(
+        true_stats = cat.read(spark, "tf_raw").groupBy("term", "bucket").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
         )
-        ids = cat.read(
-            spark, "lexicon", schema_json=meta.get("lexicon_schema")
-        ).select("term", "term_id")
+        ids = cat.read(spark, "lexicon").select("term", "term_id")
         cat.overwrite_table_partitioned(
             true_stats.join(ids, "term"), "lexicon", "bucket"
         )

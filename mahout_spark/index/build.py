@@ -290,7 +290,6 @@ def build_index(
         ).withColumn(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
         )
-        stage = cat.table_path("tf_raw") + ".__stage"
         # NO repartition before the write: hash-repartitioning on bucket
         # would both (a) shuffle every tf row and (b) collapse the
         # tokenize+write stage to n_buckets tasks. partitionBy on the
@@ -298,21 +297,14 @@ def build_index(
         # and skips the shuffle entirely, at the cost of up to
         # tasks×n_buckets files — bounded via input_partitions (sandbox)
         # or compaction (cluster).
-        tf.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-        import os
-        import shutil
-
-        final = cat.table_path("tf_raw")
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(stage, final)
+        cat.overwrite_table_partitioned(tf, "tf_raw", "bucket")
 
         docstats = docs_keyed.select(
             "doc_id",
             *[c for c in id_cols if c != "doc_id"],
             F.sha2(F.col(content_col).cast("string"), 256).alias("content_sha"),
         )
-        tf_raw = cat.read(spark, "tf_raw", schema_json=tf.schema.json())
+        tf_raw = cat.read(spark, "tf_raw")
         doclens = tf_raw.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
         # n_docs / avgdl via Observation metrics piggybacked on the write
         # job itself — one fewer serial driver job per build (the serial
@@ -352,10 +344,6 @@ def build_index(
                 # arithmetically from their own write-job metrics instead
                 # of re-aggregating the whole docstats table per batch
                 "doclen_sum": dl_sum, "doclen_n": dl_n,
-                # schemas persisted so zero-file tables (empty corpus /
-                # empty first micro-batch) stay readable across processes
-                "tf_schema": tf.schema.json(),
-                "docstats_schema": docstats_out.schema.json(),
             },
         )
     meta = cat.read_meta("postings")
@@ -363,7 +351,7 @@ def build_index(
 
     # ---- stage 2: lexicon ---------------------------------------------------
     if not (resume and cat.exists("lexicon")):
-        tf_raw = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+        tf_raw = cat.read(spark, "tf_raw")
         lex = tf_raw.groupBy("term", "bucket").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
         )
@@ -375,13 +363,9 @@ def build_index(
         cat.overwrite_table_partitioned(lex_ids, "lexicon", "bucket")
         for _c in _cleanup:
             _c.unpersist()
-        meta["lexicon_schema"] = lex_ids.schema.json()
-        cat.write_meta("postings", meta)
 
     # ---- stage 3: postings (resume unit: bucket) ---------------------------
-    lexicon = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    )
+    lexicon = cat.read(spark, "lexicon")
     done = {
         r["partition_id"]
         for r in cat.lineage_rows("postings")
@@ -414,7 +398,10 @@ def build_index(
             continue
         started = time.time()
         try:
-            part = cat.read_partitions(spark, "tf_raw", "bucket", [bucket])
+            part = _resharded(
+                cat.read_partitions(spark, "tf_raw", "bucket", [bucket]),
+                meta["docs_per_shard"],
+            )
         except FileNotFoundError:
             cat.lineage_append(
                 "postings",
@@ -438,7 +425,10 @@ def build_index(
             .sortWithinPartitions("term", "shard", "doc_id")
             .mapInPandas(encoder, postings_schema(positions))
         )
-        cat.overwrite_partition(blocks, "postings", "bucket", bucket)
+        cat.overwrite_partitions(
+            blocks.withColumn("bucket", F.lit(bucket)),
+            "postings", "bucket", [bucket],
+        )
         written = cat.read_partitions(spark, "postings", "bucket", [bucket])
         agg = written.agg(
             F.sum("count").alias("rows_in"), F.count(F.lit(1)).alias("rows_out")
@@ -473,28 +463,18 @@ def build_index(
 
 def _encode_all_buckets(
     spark, cat, lexicon, encoder, n_buckets: int, build_commit: str,
-    shard_dps: int | None = None,
 ) -> None:
     """Encode every bucket's postings in ONE job (single (term, shard)
-    shuffle), stage partitioned by bucket, then commit each bucket dir
-    atomically with its lineage row — per-bucket checkpoint granularity at
+    shuffle), stage partitioned by bucket, then swap each bucket dir in
+    and record its lineage row — per-bucket checkpoint granularity at
     one-job cost.
 
-    ``shard_dps``: recompute the shard column as ``doc_id div shard_dps``
-    instead of trusting tf_raw's stored one — the reshard path, where the
-    analysis artifacts carry over but the document sharding changes."""
-    import os
-    import shutil
-
+    The shard column is recomputed as ``doc_id div docs_per_shard`` from
+    the meta, never taken from tf_raw: a resharded catalog carries the
+    source's tf_raw, whose stored shard encodes the old docs_per_shard."""
     started = time.time()
     _meta = cat.read_meta("postings")
-    tf_raw = cat.read(spark, "tf_raw", schema_json=_meta.get("tf_schema"))
-    if shard_dps is not None:
-        # exact integer division (matches the build's //; never the
-        # double-rounding float path — see the delete.py advisory fix)
-        tf_raw = tf_raw.withColumn(
-            "shard", F.expr(f"CAST(doc_id AS BIGINT) div {int(shard_dps)}")
-        )
+    tf_raw = _resharded(cat.read(spark, "tf_raw"), _meta["docs_per_shard"])
     enc_in = tf_raw.join(
         _maybe_broadcast(lexicon.select("term", "term_id", "df")), "term"
     )
@@ -507,16 +487,15 @@ def _encode_all_buckets(
         )
         .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
     )
-    final = cat.table_path("postings")
-    stage = final + ".__stage_all"
     # per-bucket lineage stats via Observation metrics on the write job
     # (conditional sums per bucket) — replaces a post-write scan of the
-    # staged table, one fewer serial job on the build's critical path.
+    # written table, one fewer serial job on the build's critical path.
     # Guarded: 2 conditional aggregates PER BUCKET inflate the observed
     # plan/codegen linearly with index width, so wide indexes (>
-    # _OBS_MAX_BUCKETS) fall back to one post-write groupBy scan of the
-    # staged output — a second (cheap, metadata-light) job beats a
+    # _OBS_MAX_BUCKETS) fall back to one groupBy scan of the written
+    # buckets — a second (cheap, metadata-light) job beats a
     # thousand-expression observe on every write task.
+    obs = None
     if n_buckets <= _OBS_MAX_BUCKETS:
         from pyspark.sql import Observation
 
@@ -531,42 +510,28 @@ def _encode_all_buckets(
                 F.sum(F.when(hit, F.lit(1)).otherwise(F.lit(0)))
                 .alias(f"ro_{bkt}")
             )
-        blocks.observe(obs, *metrics).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(stage)
+        blocks = blocks.observe(obs, *metrics)
+    present = cat.overwrite_partitions(
+        blocks, "postings", "bucket", range(n_buckets)
+    )
+    if obs is not None:
         m = obs.get
-        stats_rows = {
-            bkt: {
-                "rows_in": int(m[f"ri_{bkt}"] or 0),
-                "rows_out": int(m[f"ro_{bkt}"] or 0),
-            }
+        stats = {
+            bkt: (int(m[f"ri_{bkt}"] or 0), int(m[f"ro_{bkt}"] or 0))
             for bkt in range(n_buckets)
         }
-    else:
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-        staged = spark.read.parquet(stage)
-        stats_rows = {
-            int(r["bucket"]): {
-                "rows_in": int(r["ri"] or 0), "rows_out": int(r["ro"] or 0)
-            }
-            for r in staged.groupBy("bucket").agg(
-                F.sum("count").alias("ri"), F.count(F.lit(1)).alias("ro")
-            ).collect()
+    elif present:
+        stats = {
+            int(r["bucket"]): (int(r["ri"] or 0), int(r["ro"] or 0))
+            for r in cat.read_partitions(spark, "postings", "bucket", present)
+            .groupBy("bucket")
+            .agg(F.sum("count").alias("ri"), F.count(F.lit(1)).alias("ro"))
+            .collect()
         }
-    os.makedirs(final, exist_ok=True)
+    else:
+        stats = {}
     for bucket in range(n_buckets):
-        src = os.path.join(stage, f"bucket={bucket}")
-        dst = cat.partition_path("postings", "bucket", bucket)
-        if os.path.isdir(src):
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            os.rename(src, dst)
-            open(os.path.join(dst, "_SUCCESS"), "a").close()
-            st = stats_rows.get(bucket)
-            ri = int(st["rows_in"]) if st else 0
-            ro = int(st["rows_out"]) if st else 0
-        else:
-            ri = ro = 0
+        ri, ro = stats.get(bucket, (0, 0))
         cat.lineage_append(
             "postings",
             {
@@ -576,7 +541,16 @@ def _encode_all_buckets(
                 "started": started, "finished": time.time(),
             },
         )
-    shutil.rmtree(stage, ignore_errors=True)
+
+
+def _resharded(tf: DataFrame, docs_per_shard: int) -> DataFrame:
+    """tf rows with ``shard`` recomputed from the catalog's current
+    docs_per_shard: tf_raw's stored column is stale after a reshard.
+    Exact integer division, never the double-rounding float path (see
+    the delete.py advisory fix)."""
+    return tf.withColumn(
+        "shard", F.expr(f"CAST(doc_id AS BIGINT) div {int(docs_per_shard)}")
+    )
 
 
 def _maybe_broadcast(lex_slice: DataFrame, max_rows: int = 5_000_000) -> DataFrame:
@@ -704,14 +678,12 @@ def reshard_index(
     m2["block_size"] = bs
     m2["resharded_from"] = src.root
     new.write_meta("postings", m2)
-    lexicon = new.read(
-        spark, "lexicon", schema_json=m2.get("lexicon_schema"))
+    lexicon = new.read(spark, "lexicon")
     encoder = _make_encoder(
         int(m2["n_docs"]), float(m2["avgdl"]), float(m2["k1"]),
         float(m2["b"]), bs, positional=bool(m2.get("positional")),
     )
     _encode_all_buckets(
         spark, new, lexicon, encoder, int(m2["n_buckets"]), build_commit,
-        shard_dps=int(docs_per_shard),
     )
     return new

@@ -66,16 +66,14 @@ def _purge_tombstones(spark: SparkSession, cat: ParquetCatalog,
     # a crash can never leave the catalog with tf_raw missing at its
     # canonical path, which matters because tf_raw is the sole source
     # for the re-encode and the purge re-run's no-op anti-join.
-    tf_raw = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+    tf_raw = cat.read(spark, "tf_raw")
     tf_live = tf_raw.join(hint, "doc_id", "left_anti")
     cat.overwrite_table_partitioned(tf_live, "tf_raw", "bucket")
 
     # docstats: filter + recompute corpus scalars on the write job
     from pyspark.sql import Observation
 
-    docstats = cat.read(
-        spark, "docstats", schema_json=meta.get("docstats_schema")
-    )
+    docstats = cat.read(spark, "docstats")
     live = docstats.join(hint, "doc_id", "left_anti")
     obs = Observation("purge_scalars")
     pos_dl = F.when(F.col("doclen") > 0, F.col("doclen"))
@@ -97,7 +95,7 @@ def _purge_tombstones(spark: SparkSession, cat: ParquetCatalog,
     # recipe as build stage 2 — bucket-partitioned, dense term ids)
     from mahout_spark.functions.ids import dense_ids
 
-    tf_live = cat.read(spark, "tf_raw", schema_json=meta.get("tf_schema"))
+    tf_live = cat.read(spark, "tf_raw")
     lex = tf_live.groupBy("term", "bucket").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
     )
@@ -115,7 +113,6 @@ def _purge_tombstones(spark: SparkSession, cat: ParquetCatalog,
     meta.update({
         "n_docs": n_docs, "avgdl": dl_sum / dl_n if dl_n else 0.0,
         "doclen_sum": dl_sum, "doclen_n": dl_n,
-        "lexicon_schema": lex_ids.schema.json(),
     })
     cat.lineage_append("postings", {
         "op": "purge", "purged": n_tomb, "n_docs": n_docs,
@@ -147,9 +144,7 @@ def compact_index(
         meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"],
         meta["block_size"], positional=bool(meta.get("positional")),
     )
-    lexicon = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    )
+    lexicon = cat.read(spark, "lexicon")
     started = time.time()
     _encode_all_buckets(
         spark, cat, lexicon, encoder, int(meta["n_buckets"]),

@@ -75,7 +75,7 @@ def delete_docs(
             [(d,) for d in ids], "doc_id long"
         )
     if cat.exists("tombstones"):
-        existing = cat.read(spark, "tombstones", schema_json=None)
+        existing = cat.read(spark, "tombstones")
         new = new.join(existing.select("doc_id"), "doc_id", "left_anti")
     now = time.time()
     # count + append WITHOUT a driver round-trip (ADVICE round 3): a

@@ -33,9 +33,7 @@ def index_stats(spark: SparkSession, cat: ParquetCatalog) -> DataFrame:
     """One summary row: (n_docs, n_terms, n_postings, avgdl, n_blocks,
     fragmented_groups, n_buckets, appends, deletes, positional)."""
     meta = cat.read_meta("postings")
-    lex = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    )
+    lex = cat.read(spark, "lexicon")
     lex_agg = lex.agg(
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("df").cast("long").alias("n_postings"),
@@ -84,10 +82,9 @@ def verify_content_integrity(
     intact index returns ZERO rows; run it after any
     build/append/compact as the end-to-end data-integrity audit. One
     broadcast-free join keyed by doc_id over two narrow projections."""
-    meta = cat.read_meta("postings")
-    stored = cat.read(
-        spark, "docstats", schema_json=meta.get("docstats_schema")
-    ).select(id_col, F.col("content_sha").alias("stored_sha"))
+    stored = cat.read(spark, "docstats").select(
+        id_col, F.col("content_sha").alias("stored_sha")
+    )
     fresh = source.select(
         id_col,
         F.sha2(F.col(content_col).cast("string"), 256).alias("source_sha"),
@@ -108,10 +105,7 @@ def index_bucket_stats(
     """Per-bucket detail: (bucket, n_terms, n_blocks, n_postings,
     fragmented_groups) ordered by bucket — the unit compaction and
     resume operate on."""
-    meta = cat.read_meta("postings")
-    lex = cat.read(
-        spark, "lexicon", schema_json=meta.get("lexicon_schema")
-    )
+    lex = cat.read(spark, "lexicon")
     lex_b = lex.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("df").cast("long").alias("n_postings"),

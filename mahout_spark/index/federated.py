@@ -106,9 +106,7 @@ def global_stats(
             # docstats (one tiny agg, same as append.py's legacy path) —
             # silently treating it as 0 would skew the global avgdl and
             # break the bit-identical-to-union contract
-            ds = cat.read(
-                spark, "docstats", schema_json=meta.get("docstats_schema")
-            )
+            ds = cat.read(spark, "docstats")
             row = ds.agg(
                 F.sum(F.when(F.col("doclen") > 0, F.col("doclen")))
                 .alias("s"),
@@ -493,9 +491,9 @@ def merge_indexes(
     out = ParquetCatalog(out_dir)
     started = time.time()
 
-    def _live(nm: str, table: str, schema_key: str) -> DataFrame:
+    def _live(nm: str, table: str) -> DataFrame:
         cat, meta = cats[nm], metas[nm]
-        df = cat.read(spark, table, schema_json=meta.get(schema_key))
+        df = cat.read(spark, table)
         if int(meta.get("deletes", 0)) and cat.exists("tombstones"):
             tomb = cat.read(spark, "tombstones").select("doc_id").distinct()
             df = df.join(F.broadcast(tomb), "doc_id", "left_anti")
@@ -504,7 +502,7 @@ def merge_indexes(
     # ---- tf_raw: union + target layout (bucket/shard recomputed) ----------
     tf_parts = []
     for nm in names:
-        tf = _live(nm, "tf_raw", "tf_schema")
+        tf = _live(nm, "tf_raw")
         tf_parts.append(
             tf.drop("bucket", "shard")
             .withColumn(
@@ -518,14 +516,11 @@ def merge_indexes(
     tf_all = tf_parts[0]
     for p in tf_parts[1:]:
         tf_all = tf_all.unionByName(p)
-    tf_all.write.mode("overwrite").partitionBy("bucket").parquet(
-        out.table_path("tf_raw")
-    )
-    tf_schema = tf_all.schema.json()
-    tf_all = out.read(spark, "tf_raw", schema_json=tf_schema)
+    out.overwrite_table_partitioned(tf_all, "tf_raw", "bucket")
+    tf_all = out.read(spark, "tf_raw")
 
     # ---- docstats: union + corpus scalars on the write job ----------------
-    ds_parts = [_live(nm, "docstats", "docstats_schema") for nm in names]
+    ds_parts = [_live(nm, "docstats") for nm in names]
     cols0 = ds_parts[0].columns
     for nm, p in zip(names[1:], ds_parts[1:]):
         if p.columns != cols0:
@@ -574,7 +569,7 @@ def merge_indexes(
     avgdl = dl_sum / dl_n if dl_n else 0.0
     k1, b = first["k1"], first["b"]
     # meta goes down BEFORE the encode (same order as build stage 1):
-    # _encode_all_buckets reads tf_schema/positional from it, and a
+    # _encode_all_buckets reads docs_per_shard/positional from it, and a
     # crashed merge leaves a catalog that a re-run resumes per bucket
     out.write_meta(
         "postings",
@@ -588,16 +583,13 @@ def merge_indexes(
             "merged_from": [cats[nm].root for nm in names],
             "stage1_sec": round(time.time() - started, 3),
             "doclen_sum": dl_sum, "doclen_n": dl_n,
-            "tf_schema": tf_schema,
-            "docstats_schema": ds_all.schema.json(),
-            "lexicon_schema": lex_ids.schema.json(),
         },
     )
     encoder = _make_encoder(
         n_docs, avgdl, k1, b, int(first["block_size"]),
         positional=positional,
     )
-    lexicon = out.read(spark, "lexicon", schema_json=lex_ids.schema.json())
+    lexicon = out.read(spark, "lexicon")
     _encode_all_buckets(
         spark, out, lexicon, encoder, n_buckets,
         build_commit or f"merge-{int(started)}",

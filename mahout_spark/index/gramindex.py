@@ -93,7 +93,7 @@ def build_gramindex(spark: SparkSession, cat: ParquetCatalog) -> None:
         )
         .sortWithinPartitions("gram", "term")
     )
-    table.write.mode("overwrite").parquet(cat.table_path("gramindex"))
+    cat.overwrite_table(table, "gramindex")
     meta = cat.read_meta("postings")
     meta["gramindex"] = True
     cat.write_meta("postings", meta)
@@ -114,8 +114,13 @@ def append_gramindex(
     Delta cost is O(batch vocabulary x avg term length); delta files are
     internally gram-sorted so row-group pruning survives. Compaction
     drops the tier for a fresh build (its stats all move there)."""
+    # cast to the bucket type the table records: int when written
+    # since schemas are recorded, bigint in older appended deltas
+    bucket = F.col("bucket").cast(
+        cat.schema(spark, "gramindex")["bucket"].dataType
+    )
     delta = (
-        _gram_rows(touched_lex.select("term", "bucket", "df"), epoch)
+        _gram_rows(touched_lex.select("term", bucket, "df"), epoch)
         .repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 8), "gram"
         )
@@ -147,7 +152,7 @@ def gram_fuzzy_expansion_rows(
     assert gram_tier_applies(stem, n), (stem, n)
     sg = _grams(stem)
     m = len(stem)
-    gi = spark.read.parquet(cat.table_path("gramindex"))
+    gi = cat.read(spark, "gramindex")
     if "epoch" not in gi.columns:  # pre-epoch table layout
         gi = gi.withColumn("epoch", F.lit(0))
     qg = spark.createDataFrame(

@@ -77,7 +77,7 @@ def build_permuterm(spark: SparkSession, cat: ParquetCatalog) -> None:
         )
         .sortWithinPartitions("rot")
     )
-    table.write.mode("overwrite").parquet(cat.table_path("permuterm"))
+    cat.overwrite_table(table, "permuterm")
     meta = cat.read_meta("postings")
     meta["permuterm"] = True
     cat.write_meta("postings", meta)
@@ -102,8 +102,13 @@ def append_permuterm(
     across base + deltas; a compaction (which rewrites all stats) drops
     the tier for a fresh build — the natural re-sort point, exactly the
     Lucene segment model applied to the dictionary."""
+    # cast to the bucket type the table records: int when written
+    # since schemas are recorded, bigint in older appended deltas
+    bucket = F.col("bucket").cast(
+        cat.schema(spark, "permuterm")["bucket"].dataType
+    )
     delta = (
-        _rotation_rows(touched_lex.select("term", "bucket", "df"), epoch)
+        _rotation_rows(touched_lex.select("term", bucket, "df"), epoch)
         .repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 8), "rot"
         )
@@ -131,7 +136,7 @@ def _rotation_candidates(
     does the work). Appended deltas re-stamp touched terms with their
     current df; per term the max-(epoch, df) struct IS the latest row
     (epoch dominates; df tiebreak is vacuous — one delta per epoch)."""
-    pt = spark.read.parquet(cat.table_path("permuterm"))
+    pt = cat.read(spark, "permuterm")
     cand = pt.filter(F.col("rot").startswith(rot_prefix))
     if "epoch" in cand.columns:
         return cand.groupBy("term", "bucket").agg(

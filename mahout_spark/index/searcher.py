@@ -1,9 +1,10 @@
 """Session-scoped query front-end with lexicon caching.
 
 A cold ``wand.topk`` call launches one lexicon-lookup job (bucket-pruned
-scan + tiny collect) before the postings scan. Interactive sessions and
-repeated-query workloads pay that per query even though the lexicon rows
-for a term never change between index mutations. ``Searcher`` removes it:
+scan + tiny collect) before the postings scan: three Spark jobs in all.
+Interactive sessions and repeated-query workloads pay that per query even
+though the lexicon rows for a term never change between index mutations.
+``Searcher`` removes it:
 
 * per-TERM driver-side cache of (bucket, df) — bounded by the number of
   distinct queried terms, NOT vocabulary size, so a 10^7-term lexicon
@@ -11,8 +12,13 @@ for a term never change between index mutations. ``Searcher`` removes it:
 * one pruned lookup job per query for cache-miss terms only; a fully
   warm query launches ZERO lexicon jobs;
 * automatic invalidation: the index's ``_meta.json`` is rewritten by
-  every append/compaction (df and corpus stats move), so its mtime+size
-  is the cache epoch — a mutated index drops the cache on the next call.
+  every append/delete/compaction (df and corpus stats move), so its
+  ``meta_version`` stamp is the cache epoch — a mutated index drops the
+  cache on the next call.
+
+Every table read passes the catalog's recorded schema, so none adds a
+schema-inference job: a warm ``topk_rows`` under the driver-exec cap is
+ONE Spark job, and a query with cache-miss terms two.
 
 The analog at cluster scale is a query-router keeping hot lexicon
 entries in memory; the postings scan stays fully distributed and
@@ -156,7 +162,7 @@ class Searcher:
         prune: bool = True,
     ) -> list[Row]:
         """Interactive top-k returning rows directly — the query-node
-        path. Warm-cache cost:
+        path. Warm-cache cost (a cache miss adds one lexicon probe job):
 
         * small/medium terms (Σ df <= DRIVER_EXEC_MAX_POSTINGS): ONE
           collect job (bucket-pruned scan of the terms' block rows, no

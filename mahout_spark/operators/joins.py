@@ -64,6 +64,9 @@ def asof_join(
     if missing:
         raise ValueError(f"right_cols not in right: {missing}")
     rts = ts_col + suffix
+    clash = sorted({rts, *(c + suffix for c in payload)} & set(left.columns))
+    if clash:
+        raise ValueError(f"suffixed right columns collide with left: {clash}")
     r = (
         right.filter(F.col(ts_col).isNotNull())
         .select(

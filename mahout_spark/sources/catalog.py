@@ -11,8 +11,23 @@ engine logic is format-agnostic behind this seam (SURVEY.md §7.3 #6).
 
 Layout:
     root/<table>/<part_col>=<value>/*.parquet     hive-style partitions
+    root/<table>/_schema.json                     the table's read schema
     root/<table>/_meta.json                       table metadata (scalars)
     root/<table>/_lineage.jsonl                   append-only lineage rows
+
+The catalog owns each table's read schema. Every write that creates or
+replaces a table records it in ``_schema.json`` inside the staged
+directory, so data and schema swap in the same rename; every read passes
+it to ``spark.read.schema``, so no read runs Spark's footer-inference
+job, and a table with zero data files reads as an empty frame. The
+recorded schema is exactly what inference would return: file column
+order, every field nullable, the partition column last with the type
+Spark infers from its directory names (``bucket`` is ``int`` although
+``pmod(xxhash64)`` writes ``bigint``). Appends must match the recorded
+schema and raise otherwise. A table written without a sidecar is inferred
+from its files once, on its first read or append, and its sidecar
+recorded then. Staging and rename-aside dirs are ``<table>.__*``
+siblings of the table, invisible to its readers.
 """
 
 from __future__ import annotations
@@ -23,6 +38,45 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType, DataType, IntegerType, LongType, MapType, StructField,
+    StructType,
+)
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested field/element/value nullable — what a
+    parquet read reports whatever nullability was written."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _nullable(dt.keyType), _nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _read_schema(
+    schema: StructType, part_col: str | None = None, values=()
+) -> StructType:
+    """The schema a parquet read of ``schema``-shaped rows returns: data
+    columns in write order, all nullable, then ``part_col`` typed as
+    Spark infers it from the ``values`` in its dir names — int when each
+    fits, else long. The catalog partitions on integral columns only."""
+    fields = [f for f in _nullable(schema).fields if f.name != part_col]
+    if part_col is not None:
+        wide = any(not -(1 << 31) <= int(v) < 1 << 31 for v in values)
+        fields.append(
+            StructField(part_col, LongType() if wide else IntegerType(), True)
+        )
+    return StructType(fields)
 
 
 class ParquetCatalog:
@@ -41,45 +95,148 @@ class ParquetCatalog:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.table_path(table))
 
+    def _stage(self, table: str, kind: str = "stage") -> str:
+        return self.table_path(table) + f".__{kind}_{uuid.uuid4().hex[:8]}"
+
+    # -- schema -------------------------------------------------------------
+
+    def _recorded(self, table: str) -> StructType | None:
+        try:
+            with open(os.path.join(self.table_path(table), SCHEMA_FILE)) as f:
+                return StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return None
+
+    @staticmethod
+    def _record(path: str, schema: StructType) -> None:
+        tmp = os.path.join(path, f"._schema_{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as f:
+            f.write(schema.json())
+        os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+
+    def schema(self, spark: SparkSession, table: str) -> StructType:
+        """The table's read schema. A table written without a sidecar is
+        inferred from its files once and the result recorded."""
+        schema = self._recorded(table)
+        if schema is None:
+            path = self.table_path(table)
+            schema = spark.read.option("basePath", path).parquet(path).schema
+            self._record(path, schema)
+        return schema
+
+    def _holds_files(self, table: str) -> bool:
+        """Whether the table dir holds a data file (anything Spark would
+        read: not ``_``/``.``-prefixed)."""
+        return any(
+            not fn.startswith(("_", "."))
+            for _dir, _subdirs, files in os.walk(self.table_path(table))
+            for fn in files
+        )
+
+    def _pin(
+        self, spark: SparkSession, table: str, schema: StructType, stage: str
+    ) -> None:
+        """Gate an append on the table's recorded schema. A table without
+        a sidecar that already holds files is bootstrapped from them
+        (``schema``); one holding none takes ``schema``. On a mismatch
+        the stage is dropped and nothing reaches the table."""
+        recorded = self._recorded(table)
+        if recorded is None and self._holds_files(table):
+            recorded = self.schema(spark, table)
+        if recorded is None:
+            os.makedirs(self.table_path(table), exist_ok=True)
+            self._record(self.table_path(table), schema)
+        elif recorded.simpleString() != schema.simpleString():
+            shutil.rmtree(stage, ignore_errors=True)
+            raise ValueError(
+                f"rows written to {table} have schema "
+                f"{schema.simpleString()}, but the table records "
+                f"{recorded.simpleString()}"
+            )
+
     # -- writes -------------------------------------------------------------
+
+    @staticmethod
+    def _staged_values(stage: str, part_col: str) -> list[str]:
+        prefix = f"{part_col}="
+        return sorted(
+            d[len(prefix):] for d in os.listdir(stage) if d.startswith(prefix)
+        )
+
+    def _write(
+        self, df: DataFrame, stage: str, part_col: str | None = None
+    ) -> StructType:
+        """Write ``df`` to ``stage`` (hive-partitioned on ``part_col``)
+        and record its read schema there; returns that schema."""
+        writer = df.write.mode("overwrite")
+        if part_col is not None:
+            writer = writer.partitionBy(part_col)
+        writer.parquet(stage)
+        values = self._staged_values(stage, part_col) if part_col else ()
+        schema = _read_schema(df.schema, part_col, values)
+        self._record(stage, schema)
+        return schema
+
+    def _swap(self, table: str, stage: str | None, final: str) -> None:
+        """Rename-aside swap of ``stage`` into ``final`` (``stage`` None:
+        drop ``final``). The old dir moves aside before the new one moves
+        in and is only deleted once the new one is live: a failed promote
+        moves it back, and a killed process leaves it whole beside the
+        table, never half-deleted."""
+        old = self._stage(table, "old")
+        if os.path.isdir(final):
+            os.rename(final, old)
+        try:
+            if stage is not None:
+                os.rename(stage, final)
+        except BaseException:
+            if os.path.isdir(old):
+                os.rename(old, final)
+            raise
+        shutil.rmtree(old, ignore_errors=True)
 
     def overwrite_table(self, df: DataFrame, table: str) -> None:
         """Atomic full-table replace (stage + swap)."""
-        final = self.table_path(table)
-        stage = final + f".__stage_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(stage)
-        old = final + f".__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(final):
-            os.rename(final, old)
-        os.rename(stage, final)
-        shutil.rmtree(old, ignore_errors=True)
+        stage = self._stage(table)
+        self._write(df, stage)
+        self._swap(table, stage, self.table_path(table))
 
     def overwrite_table_partitioned(
         self, df: DataFrame, table: str, part_col: str
     ) -> None:
         """Atomic full replace of a hive-partitioned table (stage + swap).
         Readers via read_partitions() then prune to the named dirs."""
-        final = self.table_path(table)
-        stage = final + f".__stage_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(part_col).parquet(stage)
-        old = final + f".__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(final):
-            os.rename(final, old)
-        os.rename(stage, final)
-        shutil.rmtree(old, ignore_errors=True)
+        stage = self._stage(table)
+        self._write(df, stage, part_col)
+        self._swap(table, stage, self.table_path(table))
 
-    def overwrite_partition(
-        self, df: DataFrame, table: str, part_col: str, value
-    ) -> None:
-        """Idempotent exactly-once partition write: write to a staging dir,
-        atomically rename into place (the parquet analog of Iceberg's
-        overwrite-by-partition, which makes checkpoint resume safe)."""
-        final = self.partition_path(table, part_col, value)
-        stage = final + f".__stage_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(stage)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(stage, final)
+    def overwrite_partitions(
+        self, df: DataFrame, table: str, part_col: str, values
+    ) -> list:
+        """Replace partitions ``values`` of a hive-partitioned table with
+        ``df``'s rows: one staged partitioned write, then a swap per
+        partition; a value ``df`` has no rows for loses its live dir.
+        ``df``'s schema becomes the table's. Returns the values that
+        hold rows now."""
+        stage = self._stage(table)
+        try:
+            schema = self._write(df, stage, part_col)
+            os.makedirs(self.table_path(table), exist_ok=True)
+            self._record(self.table_path(table), schema)
+            present = []
+            for v in values:
+                src = os.path.join(stage, f"{part_col}={v}")
+                if os.path.isdir(src):
+                    open(os.path.join(src, "_SUCCESS"), "a").close()
+                    present.append(v)
+                else:
+                    src = None
+                self._swap(
+                    table, src, self.partition_path(table, part_col, v)
+                )
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return present
 
     def append_partitioned(
         self, df: DataFrame, table: str, part_col: str, tag: str | None = None
@@ -91,16 +248,15 @@ class ParquetCatalog:
         ``tag`` marks every appended file so a failed multi-table append
         can be rolled back file-by-file (remove_tagged). Returns the
         partition values appended to."""
-        final = self.table_path(table)
-        stage = final + f".__append_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(part_col).parquet(stage)
+        stage = self._stage(table, "append")
+        self._pin(
+            df.sparkSession, table, self._write(df, stage, part_col), stage
+        )
         tag = tag or uuid.uuid4().hex[:8]
-        touched = []
-        for d in sorted(os.listdir(stage)):
-            if not d.startswith(f"{part_col}="):
-                continue
-            src = os.path.join(stage, d)
-            dst = os.path.join(final, d)
+        touched = self._staged_values(stage, part_col)
+        for v in touched:
+            src = os.path.join(stage, f"{part_col}={v}")
+            dst = self.partition_path(table, part_col, v)
             os.makedirs(dst, exist_ok=True)
             for fn in os.listdir(src):
                 if fn.startswith("part-"):
@@ -108,7 +264,6 @@ class ParquetCatalog:
                         os.path.join(src, fn), os.path.join(dst, f"a{tag}-{fn}")
                     )
             open(os.path.join(dst, "_SUCCESS"), "a").close()
-            touched.append(d.split("=", 1)[1])
         shutil.rmtree(stage, ignore_errors=True)
         return touched
 
@@ -117,10 +272,9 @@ class ParquetCatalog:
     ) -> None:
         """Append rows to an unpartitioned table (staged write + renames)."""
         final = self.table_path(table)
-        stage = final + f".__append_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(stage)
+        stage = self._stage(table, "append")
+        self._pin(df.sparkSession, table, self._write(df, stage), stage)
         tag = tag or uuid.uuid4().hex[:8]
-        os.makedirs(final, exist_ok=True)
         for fn in os.listdir(stage):
             if fn.startswith("part-"):
                 os.rename(
@@ -149,40 +303,15 @@ class ParquetCatalog:
 
     # -- reads --------------------------------------------------------------
 
-    def _has_data_files(self, table: str) -> bool:
-        """True iff any parquet data file exists under the table dir
-        (including partition subdirs). The structural form of the
-        \"zero-file table\" check — a dir holding only _SUCCESS/_meta is
-        the footprint of writing an empty DataFrame."""
-        for _dirpath, _dirnames, filenames in os.walk(self.table_path(table)):
-            if any(fn.endswith(".parquet") for fn in filenames):
-                return True
-        return False
+    def _reader(self, spark: SparkSession, table: str):
+        return spark.read.schema(self.schema(spark, table)).option(
+            "basePath", self.table_path(table)
+        )
 
-    def read(
-        self, spark: SparkSession, table: str, schema_json: str | None = None
-    ) -> DataFrame:
-        """Read a table; ``schema_json`` (a StructType.json() string) makes
-        the read robust to ZERO-FILE tables — a parquet dir holding only
-        _SUCCESS (the footprint of writing an empty DataFrame) cannot
-        infer a schema, but an empty corpus partition / empty first
-        micro-batch is a legitimate state the index lifecycle must
-        survive. The zero-file state is detected STRUCTURALLY (no data
-        files on disk) rather than by matching Spark's version-specific
-        UNABLE_TO_INFER_SCHEMA message, so any other read failure
-        (corrupt footers, permissions) surfaces immediately."""
-        reader = spark.read.option("basePath", self.table_path(table))
-        if schema_json is not None and not self._has_data_files(table):
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            return (
-                spark.read.schema(StructType.fromJson(_json.loads(schema_json)))
-                .option("basePath", self.table_path(table))
-                .parquet(self.table_path(table))
-            )
-        return reader.parquet(self.table_path(table))
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """Read a table under its recorded schema (no inference job; a
+        table with zero data files reads as an empty frame)."""
+        return self._reader(spark, table).parquet(self.table_path(table))
 
     def read_partitions(
         self, spark: SparkSession, table: str, part_col: str, values: list
@@ -198,10 +327,7 @@ class ParquetCatalog:
             raise FileNotFoundError(
                 f"no partitions {values} in table {table}"
             )
-        return (
-            spark.read.option("basePath", self.table_path(table))
-            .parquet(*paths)
-        )
+        return self._reader(spark, table).parquet(*paths)
 
     # -- metadata / lineage ---------------------------------------------------
 

@@ -429,6 +429,19 @@ def test_significant_text_filters_duplicate_text(spark, docs_df,
     assert any(raw[t] > clean.get(t, 0) for t in raw)
 
 
+def test_string_stats_empty_match_keeps_count_row(spark, built, docs_df):
+    """No matching doc means no characters and so no entropy row; the
+    length-stats row still comes back, with count 0 and NULL entropy
+    (ES returns a count=0 stats object)."""
+    from mahout_spark.index.aggs import string_stats
+
+    rows = string_stats(
+        spark, built, docs_df, "zzqxnotaterm", "source").collect()
+    assert len(rows) == 1
+    assert rows[0]["count"] == 0
+    assert rows[0]["entropy"] is None and rows[0]["min_length"] is None
+
+
 def test_metric_aggs_match_python(spark, built, docs_df, token_sets):
     """MAD / boxplot / string_stats vs numpy-python recomputation over
     the same match set."""

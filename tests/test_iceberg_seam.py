@@ -7,7 +7,7 @@ append + rollback, snapshot read, table metadata with a fresh
 ``meta_version`` per write, append-only lineage rows. Those are exactly
 the operations Iceberg provides transactionally —
 
-    overwrite_partition      -> df.writeTo(t).overwritePartitions()
+    overwrite_partitions     -> df.writeTo(t).overwritePartitions()
     append_partitioned/table -> df.writeTo(t).append()  (one snapshot)
     remove_tagged            -> table rollback to the pre-append snapshot
     read/read_partitions     -> spark.read.format("iceberg") + partition

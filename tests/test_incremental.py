@@ -372,8 +372,8 @@ class TestEmptyCorpus:
     """A zero-doc build (or an empty first micro-batch) must produce a
     valid, queryable, appendable index — not a schema-inference crash.
     Zero-file parquet tables are the footprint of writing an empty
-    DataFrame; the catalog reads them back via schemas persisted in the
-    index meta."""
+    DataFrame; the catalog reads them back under the schema it recorded
+    beside each table."""
 
     def test_empty_build_then_append(self, spark, corpus, tmp_path_factory):
         from mahout_spark.index.append import append_to_index
@@ -406,6 +406,260 @@ class TestEmptyCorpus:
         h(corpus.filter(F.col("doc_id") < 40), 1)
         assert cat.read_meta("postings")["n_docs"] == 40
         assert topk(spark, cat, ["spark"], k=5).count() > 0
+
+
+class TestPinnedSchemas:
+    """Every table's read schema is recorded at write time
+    (``_schema.json``) and passed to every read, so reads never run
+    Spark's footer-inference job; the recorded schema must be exactly
+    what inference returns."""
+
+    @staticmethod
+    def _assert_recorded_equals_inferred(spark, cat):
+        from mahout_spark.sources.catalog import SCHEMA_FILE
+
+        tables = [
+            t for t in sorted(os.listdir(cat.root))
+            if os.path.isfile(os.path.join(cat.table_path(t), SCHEMA_FILE))
+        ]
+        assert {"docstats", "tf_raw", "lexicon", "postings"} <= set(tables)
+        for t in tables:
+            inferred = spark.read.parquet(cat.table_path(t)).schema
+            assert cat.schema(spark, t) == inferred, t
+        return tables
+
+    def test_recorded_schemas_match_inference(
+        self, spark, corpus, tmp_path_factory
+    ):
+        from mahout_spark.index.append import append_to_index
+        from mahout_spark.index.build import build_index
+        from mahout_spark.index.compact import compact_index
+        from mahout_spark.index.delete import delete_docs
+        from mahout_spark.index.gramindex import build_gramindex
+        from mahout_spark.index.permuterm import build_permuterm
+
+        small = corpus.filter(F.col("doc_id") < 160)
+        cat = build_index(
+            spark, small.filter(F.col("doc_id") < 120),
+            str(tmp_path_factory.mktemp("pin")), content_col="text",
+            mode="text", n_buckets=4, docs_per_shard=32, resume=False,
+        )
+        build_permuterm(spark, cat)
+        build_gramindex(spark, cat)
+        self._assert_recorded_equals_inferred(spark, cat)
+        delete_docs(spark, cat, [3, 5, 8])
+        assert "tombstones" in self._assert_recorded_equals_inferred(
+            spark, cat)
+        append_to_index(spark, cat, small.filter(F.col("doc_id") >= 120),
+                        content_col="text", batch_id="b1")
+        self._assert_recorded_equals_inferred(spark, cat)
+        compact_index(spark, cat)
+        self._assert_recorded_equals_inferred(spark, cat)
+
+        pos = build_index(
+            spark, small, str(tmp_path_factory.mktemp("pin_pos")),
+            content_col="text", mode="text", n_buckets=4,
+            docs_per_shard=32, positions=True, resume=False,
+        )
+        self._assert_recorded_equals_inferred(spark, pos)
+
+        # zero-doc build: only docstats holds a (zero-row) file; the
+        # partitioned tables hold none, so inference cannot read them —
+        # their recorded schemas equal those of a non-empty build
+        empty = build_index(
+            spark, spark.createDataFrame([], "doc_id long, text string"),
+            str(tmp_path_factory.mktemp("pin_empty")), content_col="text",
+            mode="text", n_buckets=4, docs_per_shard=32, resume=False,
+        )
+        assert empty.schema(spark, "docstats") == spark.read.parquet(
+            empty.table_path("docstats")).schema
+        for t in ("tf_raw", "lexicon", "postings"):
+            assert empty.schema(spark, t) == cat.schema(spark, t), t
+            assert empty.read(spark, t).count() == 0
+
+    def test_missing_sidecar_is_bootstrapped(
+        self, spark, corpus, tmp_path_factory
+    ):
+        """An index written before schemas were recorded: the first read
+        infers the schema from the files and records it."""
+        from mahout_spark.index.build import build_index
+        from mahout_spark.sources.catalog import SCHEMA_FILE
+
+        cat = build_index(
+            spark, corpus.filter(F.col("doc_id") < 120),
+            str(tmp_path_factory.mktemp("pin_boot")), content_col="text",
+            mode="text", n_buckets=4, docs_per_shard=32, resume=False,
+        )
+        before = _results(spark, cat)
+        sidecar = os.path.join(cat.table_path("lexicon"), SCHEMA_FILE)
+        with open(sidecar) as f:
+            recorded = f.read()
+        os.remove(sidecar)
+        assert _results_equal(_results(spark, cat), before)
+        with open(sidecar) as f:
+            assert f.read() == recorded
+
+    def test_append_with_other_schema_is_rejected(self, spark, tmp_path):
+        from mahout_spark.sources.catalog import ParquetCatalog
+
+        cat = ParquetCatalog(str(tmp_path))
+        cat.append_table(
+            spark.createDataFrame([(1, 0.5)], "doc_id long, at double"), "t")
+        cat.append_partitioned(
+            spark.createDataFrame([(1, 3)], "v long, bucket long"),
+            "p", "bucket")
+        with pytest.raises(ValueError, match="records"):
+            cat.append_table(
+                spark.createDataFrame([(2, "x")], "doc_id long, at string"),
+                "t")
+        with pytest.raises(ValueError, match="records"):
+            cat.append_partitioned(
+                spark.createDataFrame([(2, 1)], "w long, bucket long"),
+                "p", "bucket")
+        # nothing reached either table, and no stage is left behind
+        assert [tuple(r) for r in cat.read(spark, "t").collect()] == \
+            [(1, 0.5)]
+        assert [tuple(r) for r in cat.read(spark, "p").collect()] == [(1, 3)]
+        assert sorted(os.listdir(tmp_path)) == ["p", "t"]
+
+    def test_failed_partition_swap_keeps_live_partition(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A failure between moving the live partition out and the new
+        one in must leave the live partition whole; a rerun then
+        completes the overwrite."""
+        from mahout_spark.sources.catalog import ParquetCatalog
+
+        cat = ParquetCatalog(str(tmp_path))
+        cat.overwrite_table_partitioned(
+            spark.createDataFrame(
+                [(i, i % 2) for i in range(6)], "v long, bucket long"),
+            "t", "bucket")
+        new = spark.createDataFrame([(100, 1), (101, 1)], "v long, bucket long")
+        rename = os.rename
+
+        def failing_promote(src, dst):
+            if ".__stage_" in src:
+                raise OSError("injected failure")
+            rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", failing_promote)
+        with pytest.raises(OSError, match="injected"):
+            cat.overwrite_partitions(new, "t", "bucket", [1])
+        monkeypatch.setattr(os, "rename", rename)
+
+        def rows():
+            return sorted(tuple(r) for r in cat.read(spark, "t").collect())
+
+        assert rows() == [(i, i % 2) for i in range(6)]
+        assert sorted(os.listdir(tmp_path)) == ["t"]  # stage dropped
+        assert cat.overwrite_partitions(new, "t", "bucket", [1]) == [1]
+        assert rows() == [(0, 0), (2, 0), (4, 0), (100, 1), (101, 1)]
+
+    def test_append_to_sidecarless_table_checks_its_files(
+        self, spark, tmp_path
+    ):
+        """A table written before schemas were recorded: an append is
+        checked against the schema its files carry, never recorded
+        from the incoming rows."""
+        from mahout_spark.sources.catalog import ParquetCatalog, SCHEMA_FILE
+
+        cat = ParquetCatalog(str(tmp_path))
+        spark.createDataFrame([(1, 0.5)], "doc_id long, at double") \
+            .write.parquet(cat.table_path("t"))
+        with pytest.raises(ValueError, match="records"):
+            cat.append_table(
+                spark.createDataFrame([(2, "x")], "doc_id long, at string"),
+                "t")
+        assert os.path.isfile(os.path.join(cat.table_path("t"), SCHEMA_FILE))
+        cat.append_table(
+            spark.createDataFrame([(2, 1.5)], "doc_id long, at double"), "t")
+        assert sorted(tuple(r) for r in cat.read(spark, "t").collect()) == \
+            [(1, 0.5), (2, 1.5)]
+
+    def test_append_to_legacy_tiers(self, spark, corpus, tmp_path_factory):
+        """An index written before schemas were recorded whose permuterm
+        and gram tiers took an append then: their delta files hold
+        ``bucket`` as bigint (the lexicon merge's type) beside int base
+        files. A further append bootstraps each tier's schema from its
+        files and writes its delta in that type; expansion through the
+        tiers still equals the lexicon scan."""
+        from pyspark.sql.types import LongType
+
+        from mahout_spark.index.append import append_to_index
+        from mahout_spark.index.boolquery import (
+            _fuzzy_expansion_rows,
+            _wildcard_expansion_rows,
+        )
+        from mahout_spark.index.build import build_index
+        from mahout_spark.index.gramindex import (
+            build_gramindex,
+            expand_fuzzy_rows,
+        )
+        from mahout_spark.index.permuterm import (
+            build_permuterm,
+            expand_wildcard_rows,
+        )
+        from mahout_spark.sources.catalog import SCHEMA_FILE
+
+        cat = build_index(
+            spark, corpus.filter(F.col("doc_id") < 200),
+            str(tmp_path_factory.mktemp("legacy_tiers")), content_col="text",
+            mode="simple", n_buckets=4, docs_per_shard=64, resume=False,
+        )
+        build_permuterm(spark, cat)
+        build_gramindex(spark, cat)
+        append_to_index(
+            spark, cat, corpus.filter(F.col("doc_id").between(200, 259)),
+            content_col="text", batch_id="b1")
+
+        # rewrite the tiers' delta files with a bigint bucket and drop
+        # every sidecar: the layout such an index has on disk
+        scratch = str(tmp_path_factory.mktemp("legacy_deltas"))
+        for t in ("permuterm", "gramindex"):
+            d = cat.table_path(t)
+            deltas = [os.path.join(d, f) for f in os.listdir(d)
+                      if f.startswith("a")]
+            assert deltas, t
+            out = os.path.join(scratch, t)
+            spark.read.parquet(*deltas).withColumn(
+                "bucket", F.col("bucket").cast("long")
+            ).write.parquet(out)
+            for f in deltas:
+                os.remove(f)
+            for f in os.listdir(out):
+                if f.startswith("part-"):
+                    os.rename(os.path.join(out, f),
+                              os.path.join(d, f"alegacy-{f}"))
+        for dirpath, _dirs, files in os.walk(cat.root):
+            if SCHEMA_FILE in files:
+                os.remove(os.path.join(dirpath, SCHEMA_FILE))
+
+        extra = spark.createDataFrame(
+            [(90001, "zebraqux mergeeq data")], ["doc_id", "text"])
+        append_to_index(
+            spark, cat,
+            corpus.filter(F.col("doc_id").between(260, 299))
+            .unionByName(extra),
+            content_col="text", batch_id="b2")
+        for t in ("permuterm", "gramindex"):
+            assert cat.schema(spark, t)["bucket"].dataType == LongType(), t
+
+        def rows(rs, *cols):
+            return [tuple(int(r[c]) if c != "term" else r[c] for c in cols)
+                    for r in rs]
+
+        lex = cat.read(spark, "lexicon")
+        for p in ["*qux", "*an", "m*e", "*ble"]:
+            assert rows(expand_wildcard_rows(spark, cat, lex, p, 64),
+                        "term", "bucket", "df") == \
+                rows(_wildcard_expansion_rows(lex, p, 64),
+                     "term", "bucket", "df"), p
+        for stem, n in [("mergeeq", 1), ("data", 1)]:
+            assert rows(expand_fuzzy_rows(spark, cat, lex, stem, n, 64),
+                        "term", "bucket", "df", "dist") == \
+                rows(_fuzzy_expansion_rows(lex, stem, n, 64),
+                     "term", "bucket", "df", "dist"), (stem, n)
 
 
 def _results_equal(a, b):

@@ -300,3 +300,39 @@ def test_searcher_topk_rows_matches_topk(spark, built, monkeypatch):
         got = [(r["doc_id"], r["score"])
                for r in s.topk_rows(terms, k=k, mode_all=mode_all)]
         assert got == expected, (terms, k, mode_all, "distributed")
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_job_counts(spark, built):
+    """Reads pass the catalog's recorded schema, so none runs a
+    footer-inference job: a warm head query is one job (the postings
+    scan), a tail query that misses the lexicon cache two (probe +
+    scan), and wand.topk three (probe, then scan + kernel + merge)."""
+    from mahout_spark.index.searcher import Searcher
+
+    lex = sorted(
+        (r["df"], r["term"])
+        for r in built.read(spark, "lexicon").select("term", "df").collect()
+    )
+    head = [lex[-1][1], lex[-2][1]]
+    tails = [t for _, t in lex[:3]]
+    s = Searcher(spark, built)
+    s.topk_rows(head)  # fills the lexicon cache
+    assert _jobs(spark, lambda: s.topk_rows(head)) == 1
+    for t in tails:
+        assert _jobs(spark, lambda: s.topk_rows([t])) == 2, t
+    assert _jobs(spark, lambda: topk(spark, built, head).collect()) == 3

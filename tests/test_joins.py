@@ -103,6 +103,21 @@ def test_asof_rejects(spark):
         asof_join(l, r, on="user_id", right_cols=["nope"])
 
 
+def test_asof_rejects_suffix_collisions(spark):
+    """A left column already named like a suffixed right column would
+    give the output duplicate names; both the payload and the matched
+    timestamp are checked."""
+    l, r = _frames(spark)
+    with pytest.raises(ValueError, match=r"collide.*value_r"):
+        asof_join(l.withColumn("value_r", F.lit(0.0)), r, on="user_id")
+    with pytest.raises(ValueError, match=r"collide.*ts_r"):
+        asof_join(l.withColumn("ts_r", F.col("ts")), r, on="user_id")
+    # a different suffix clears the clash
+    out = asof_join(l.withColumn("value_r", F.lit(0.0)), r, on="user_id",
+                    suffix="_right")
+    assert {"value_r", "value_right", "ts_right"} <= set(out.columns)
+
+
 def test_range_join_bands_and_edges(spark):
     rows = [(1, 0.0), (2, 5.0), (3, 7.5), (4, -3.0), (5, None),
             (6, 100.0), (7, 100.0001)]
